@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  Descending, InterpretedOrdering, SortOrder}
 
 /** Per-partition bounded top-k pre-selection for "rank window then keep
   * rank <= k" plans (guide §2.3 "shuffle fewer bytes", §2.4: the window's
@@ -16,9 +19,9 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
   * most `keys x k` survivors with a bounded heap, and only those cross the
   * exchange; the unchanged final window re-ranks the survivors and produces
   * bit-identical rows (same values, same (score desc, tie asc) total order
-  * -- ties are broken by the unique `tie` column, and score comparison
-  * mirrors Spark's sort semantics: -0.0 == 0.0, NaN greater than any other
-  * value, nulls last under desc).
+  * -- ties are broken by the unique `tie` column, and both columns compare
+  * with Spark's sort semantics for their type: -0.0 == 0.0, NaN greater
+  * than any other value, nulls last under desc).
   *
   * Heap state per task is `distinct keys x k` rows — the callers' key sets
   * are driver-held query batches (hundreds), so the bound is a few thousand
@@ -31,7 +34,9 @@ object TopK {
   /** `df` reduced to at most k rows per `keyCol` value PER PARTITION, by
     * (`scoreCol` desc, `tieCol` asc) — a superset of the global per-key
     * top-k, to be fed to the exact final rank window. `tieCol` must be
-    * unique within a key (it is the rank tie-break). Schema unchanged. */
+    * unique within a key (it is the rank tie-break). Schema unchanged.
+    * Both columns compare by Spark's own sort order for their types (any
+    * orderable score and tie type: Long, Int, String, …). */
   private[graft] def prunePerKey(df: DataFrame, keyCol: String,
       scoreCol: String, tieCol: String, k: Int): DataFrame = {
     if (k <= 0) return df.limit(0)
@@ -39,30 +44,27 @@ object TopK {
     val ki = schema.fieldIndex(keyCol)
     val si = schema.fieldIndex(scoreCol)
     val ti = schema.fieldIndex(tieCol)
+    val (scoreType, tieType) = (schema(si).dataType, schema(ti).dataType)
     df.mapPartitions { rows =>
-      // heap head = the worst kept row (the cutoff); comparator orders
-      // "worse" as least, matching (score desc_nulls_last, tie asc)
-      final case class Kept(noScore: Boolean, score: Double, tie: Long, row: Row)
-      val worstFirst = new java.util.Comparator[Kept] {
-        def compare(a: Kept, b: Kept): Int = {
-          if (a.noScore != b.noScore) return if (a.noScore) -1 else 1
-          if (!a.noScore) {
-            val c = java.lang.Double.compare(a.score, b.score)
-            if (c != 0) return c
-          }
-          java.lang.Long.compare(b.tie, a.tie)
-        }
-      }
+      // the final window's order, (score desc nulls last, tie asc), over
+      // the Catalyst values of the two columns
+      val order = new InterpretedOrdering(Seq(
+        SortOrder(BoundReference(0, scoreType, nullable = true), Descending),
+        SortOrder(BoundReference(1, tieType, nullable = true), Ascending)))
+      val toScore = CatalystTypeConverters.createToCatalystConverter(scoreType)
+      val toTie = CatalystTypeConverters.createToCatalystConverter(tieType)
+      final case class Kept(key: InternalRow, row: Row)
+      // heap head = the worst kept row (the cutoff)
+      val worstFirst: java.util.Comparator[Kept] = (a, b) => order.compare(b.key, a.key)
       val heaps = new java.util.HashMap[Any, java.util.PriorityQueue[Kept]]()
       rows.foreach { r =>
-        val kept = Kept(r.isNullAt(si),
-          // + 0.0 collapses -0.0 to 0.0, mirroring Spark's sort equality
-          if (r.isNullAt(si)) 0.0 else r.getDouble(si) + 0.0,
-          r.getLong(ti), r)
+        val kept = Kept(InternalRow(toScore(r.get(si)), toTie(r.get(ti))), r)
+        // default capacity: the heap grows on demand and never holds more
+        // than k rows, and k may be Int.MaxValue
         val heap = heaps.computeIfAbsent(r.get(ki),
-          _ => new java.util.PriorityQueue[Kept](k + 1, worstFirst))
+          _ => new java.util.PriorityQueue[Kept](worstFirst))
         if (heap.size < k) heap.offer(kept)
-        else if (worstFirst.compare(kept, heap.peek) > 0) {
+        else if (order.compare(kept.key, heap.peek.key) < 0) {
           heap.poll(); heap.offer(kept)
         }
       }

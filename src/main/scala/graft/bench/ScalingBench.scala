@@ -419,9 +419,9 @@ object ScalingBench {
          |
          |Method notes:
          |- Batch BM25 top-k (Searcher.bm25TopKBatch) evaluates the whole
-         |  query set in ONE plan: a broadcast of (q_id, term_id, idf), one
-         |  pruned postings scan, one (q_id, doc) aggregation, one per-query
-         |  top-k window. Per-query plans are pinned at ~3 q/s at ANY
+         |  query set in ONE plan: one pruned block-table scan, per doc
+         |  bucket a k-heap for every query (no (q_id, doc) exchange), one
+         |  per-query top-k window. Per-query plans are pinned at ~3 q/s at ANY
          |  parallelism by the driver's single DAGScheduler event loop —
          |  the single-stream line shows exactly that, and is reported as a
          |  latency (not capacity) number.

@@ -271,33 +271,42 @@ object BlockMaxWand {
 
   /** BATCH top-k over the block table: evaluate a whole QUERY SET with one
     * plan — the realistic offline shape at 10^12 docs (per-query plans pay
-    * fixed driver costs that do not shrink with cluster size; exhaustive
-    * batch scoring decodes every posting of every query term).
+    * fixed driver costs that do not shrink with cluster size).
     *
     * One pruned blocks scan for the UNION of all queries' terms, one
     * doc-bucket group pass; inside each bucket every query runs its own
-    * independent WAND over fresh cursors sharing the bucket's (already
-    * materialized) per-term block lists, so the block-max skip logic — and
-    * its rank-identity-to-exhaustive guarantee — is exactly [[topK]]'s,
-    * amortized across the set. The global merge ranks `≤ k × buckets` rows
-    * per query through one window.
+    * cursor loop over fresh cursors sharing the bucket's (already
+    * materialized) per-term block lists and keeps its own k-heap. A
+    * (query, doc)'s postings all live in the doc's bucket, so its score is
+    * complete inside one group: no scored (q_id, doc) row ever crosses an
+    * exchange. The global merge ranks `≤ k × buckets` rows per query through
+    * one window.
+    *
+    * `prune` selects the only difference between the two batch surfaces:
+    * true runs block-max WAND (exactly [[topK]]'s skip logic, amortized
+    * across the set); false pins the threshold at −∞, so every posting of
+    * every query term is decoded and scored (the exhaustive batch). Both
+    * modes visit cursors in the same order, sum a doc's term scores in the
+    * same order and cut with the same (score desc, doc_ord asc) heap rule,
+    * and WAND only skips docs that cannot enter the heap — so the two modes
+    * return bit-identical rows. k ≤ 0 yields no rows.
     *
     * @param queries q_id -> (term_id -> idf weight)
     * @return (q_id, rank, doc_ord, score), rank 1-based per query
     */
-  def topKBatch(
+  private[query] def topKBatch(
       blocks: Dataset[PostingBlockRow],
       queries: Map[Int, Map[Long, Double]],
       k: Int,
       params: BlockParams,
       avgdl: Double,
-      metrics: Option[WandMetrics] = None
+      prune: Boolean,
+      metrics: Option[WandMetrics]
   ): DataFrame = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    require(k > 0, "k must be positive")
     val live = queries.filter(_._2.nonEmpty)
-    if (live.isEmpty)
+    if (k <= 0 || live.isEmpty)
       return Seq.empty[(Int, Long, Long, Double)].toDF("q_id", "rank", "doc_ord", "score")
     val ids = live.values.flatMap(_.keys).toSeq.distinct
     val bq = spark.sparkContext.broadcast((live, params, avgdl))
@@ -317,7 +326,7 @@ object BlockMaxWand {
             byTerm.get(tid).map(bs => new Cursor(w, bs, p, adl, metrics))
           }.toArray
           if (cursors.isEmpty) Iterator.empty
-          else wand(cursors, k).map { case (d, s) => (qid, d, s) }
+          else wand(cursors, k, prune).map { case (d, s) => (qid, d, s) }
         }
       }
       .toDF("q_id", "doc_ord", "score")
@@ -428,12 +437,17 @@ object BlockMaxWand {
     }
   }
 
-  private def wand(cursors0: Array[Cursor], k: Int): Iterator[(Long, Double)] = {
+  /** Per-bucket top-k for one query. `prune = false` keeps the threshold
+    * at −∞: every pivot is the smallest current doc and is fully scored,
+    * in the same cursor and summation order as the pruned run. */
+  private def wand(cursors0: Array[Cursor], k: Int,
+      prune: Boolean = true): Iterator[(Long, Double)] = {
     val heap = mutable.PriorityQueue.empty[Hit](worstFirst)
     val all = cursors0.filterNot(_.exhausted)
     if (all.isEmpty) return Iterator.empty
 
-    def threshold: Double = if (heap.size < k) Double.NegativeInfinity else heap.head.score
+    def threshold: Double =
+      if (!prune || heap.size < k) Double.NegativeInfinity else heap.head.score
     def qualifies(s: Double, d: Long): Boolean =
       heap.size < k || {
         val w = heap.head
@@ -460,10 +474,14 @@ object BlockMaxWand {
           while (p + 1 < live.length && live(p + 1).curDoc == pivotDoc) p += 1
 
           if (live(0).curDoc == pivotDoc) {
+            val t = threshold
             var bm = 0.0
             var j = 0
-            while (j <= p) { bm += live(j).shallowUb(pivotDoc); j += 1 }
-            if (bm >= threshold) {
+            // no block-max sum needed while the threshold is −∞
+            while (t > Double.NegativeInfinity && j <= p) {
+              bm += live(j).shallowUb(pivotDoc); j += 1
+            }
+            if (bm >= t) {
               // fully score the pivot
               var s = 0.0
               var j2 = 0

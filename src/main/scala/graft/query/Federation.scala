@@ -172,84 +172,42 @@ final class Federation private (
   }
 
   /** Federated batch BM25 top-k — the query-set-replay shape
-    * ([[Searcher.bm25TopKBatch]]) across slices: ONE slot broadcast + one
-    * pruned postings scan + one (q_id, doc) aggregation per slice with
-    * global idf weights, per-(slice, q_id) k cut, then one gather window
-    * over ≤ slices·queries·k rows. Returns `(q_id, rank, tieCols…, score)`
-    * — ranks and scores identical to the monolithic batch path. */
-  /** `(q_id, term)` slots for a batch query set, analyzer applied once. */
-  private def batchSlots(keywords: Seq[String]): Seq[(Int, String)] =
-    keywords.zipWithIndex.flatMap {
-      case (kw, qi) => analyzer.terms(kw).distinct.map(t => (qi, t))
-    }
+    * ([[Searcher.bm25TopKBatch]]) across slices: each slice runs the
+    * monolithic per-doc-bucket batch kernel on its global-stats view
+    * (global idf/avgdl injected, one concurrent dictionary pass for all
+    * slices), so every slice emits at most k rows per query with no
+    * (q_id, doc) exchange; those rows fetch their `tieCols` and one gather
+    * window ranks ≤ slices·queries·k rows. Returns
+    * `(q_id, rank, tieCols…, score)` — ranks and scores identical to the
+    * monolithic batch path. Each slice cuts exact-score ties by `doc_ord`,
+    * so [[bm25TopKWand]]'s tie-break caveat applies. k ≤ 0 yields no rows. */
+  def bm25TopKBatch(keywords: Seq[String], k: Int): DataFrame =
+    batchTopK(keywords, k, prune = false, metrics = None)
 
-  /** The shared batch gather: one window over ≤ slices·queries·k per-slice
-    * survivors, cut to k per q_id, projected to
-    * `(q_id, rank, tieCols…, score)`. */
-  private def gatherBatch(parts: Seq[DataFrame], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("score") +: tieAsc: _*)
-    val keyThenScore = (tieCols.map(col) :+ col("score")).toArray
-    unionAll(parts) match {
-      case None =>
-        emptyDocs(withScore = true)
-          .select(lit(0).as("q_id") +: lit(0L).as("rank") +: keyThenScore: _*)
-          .limit(0)
-      case Some(all) =>
-        all.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("q_id") +: col("rank").cast("long").as("rank") +: keyThenScore: _*)
-    }
-  }
-
-  def bm25TopKBatch(keywords: Seq[String], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qTerms = batchSlots(keywords)
-    val rtss = resolveGlobal(qTerms.map(_._2).distinct)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("score") +: tieAsc: _*)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty =>
-        val byTerm = rts.map(rt => rt.term -> rt).toMap
-        val slots = qTerms.flatMap { case (qi, t) =>
-          byTerm.get(t).map(rt => (qi, rt.termId, s.bm25Idf(rt.df)))
-        }
-        s.index.docs
-          .join(s.batchScores(slots, byTerm.values.toSeq), "doc_ord")
-          .drop("doc_ord")
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .drop("rank")
-    }
-    gatherBatch(parts, k)
-  }
-
-  /** Federated batch BM25 top-k WITH block-max WAND pruning — the realistic
-    * offline query-service shape across slices: per slice, ONE pruned
-    * blocks scan for the union of the set's terms with every query's WAND
-    * run per doc bucket ([[BlockMaxWand.topKBatch]], global idf/avgdl
-    * injected — bounds stay lossless), per-slice per-query k already cut
-    * by WAND's heaps, one gather window. Rank-identical to
-    * [[bm25TopKBatch]] (pinned in FederationSpec). */
+  /** [[bm25TopKBatch]] with block-max WAND pruning turned on in the same
+    * per-slice kernel (bounds recomputed from the injected global stats, so
+    * pruning stays lossless); rows are bit-identical to [[bm25TopKBatch]]'s
+    * (pinned in FederationSpec). One shared `metrics` accumulates skip
+    * rates across slices. */
   def bm25TopKBatchWand(keywords: Seq[String], k: Int,
-      metrics: Option[WandMetrics] = None): DataFrame = {
-    val qTerms = batchSlots(keywords)
-    val rtss = resolveGlobal(qTerms.map(_._2).distinct)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty =>
-        val byTerm = rts.map(rt => rt.term -> rt).toMap
-        val queries: Map[Int, Map[Long, Double]] = qTerms
-          .flatMap { case (qi, t) =>
-            byTerm.get(t).map(rt => (qi, rt.termId, s.bm25Idf(rt.df))) }
-          .groupBy(_._1)
-          .map { case (qi, rows) => qi -> rows.map(r => r._2 -> r._3).toMap }
-        s.index.docs
-          .join(BlockMaxWand.topKBatch(s.blocks, queries, k, s.blockParams,
-            s.index.avgDocLen, metrics).drop("rank"), "doc_ord")
+      metrics: Option[WandMetrics] = None): DataFrame =
+    batchTopK(keywords, k, prune = true, metrics)
+
+  private def batchTopK(keywords: Seq[String], k: Int, prune: Boolean,
+      metrics: Option[WandMetrics]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("q_id")).orderBy(desc("score") +: tieAsc: _*)
+    val parts = slicesWithGlobalStats(keywords.flatMap(analyzer.terms(_)).distinct)
+      .map { s =>
+        s.index.docs.select(col("doc_ord") +: tieCols.map(col): _*)
+          .join(s.batchTopK(keywords, k, prune, metrics).drop("rank"), "doc_ord")
           .drop("doc_ord")
-    }
-    gatherBatch(parts, k)
+      }
+    unionAll(parts).get
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("q_id") +: col("rank").cast("long").as("rank") +:
+        tieCols.map(col) :+ col("score"): _*)
   }
 
   // --------------------------- global-vocabulary dictionary expansion

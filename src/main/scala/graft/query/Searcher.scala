@@ -1768,48 +1768,33 @@ final class Searcher(
     * result collection) that do not shrink with cluster size — measured at
     * ~3 queries/sec regardless of local[8] vs local[32]. Replaying a query
     * SET (the reference's own evaluation mode, and the realistic offline
-    * shape at 10^12 docs) amortizes those costs: one broadcast of
-    * (q_id, term_id, idf) slots, one pruned postings scan for the union of
-    * all query terms, one (q_id, doc) aggregation, one per-query top-k
-    * window. Returns (q_id, rank, doc_ord, score); AND-empty/unknown-term
-    * queries simply yield no rows for their q_id (OR semantics per query).
+    * shape at 10^12 docs) amortizes those costs: one dictionary lookup, one
+    * pruned blocks scan for the union of all query terms, one doc-bucket
+    * group pass in which every query scores every posting of its terms and
+    * keeps a per-bucket k-heap, one per-query top-k window over
+    * ≤ buckets × k rows. A (q_id, doc)'s postings all sit in the doc's
+    * bucket, so no scored (q_id, doc) row is exchanged or aggregated.
+    * Returns (q_id, rank, doc_ord, score); AND-empty/unknown-term queries
+    * simply yield no rows for their q_id (OR semantics per query), and
+    * k ≤ 0 yields no rows.
     */
-  def bm25TopKBatch(keywords: Seq[String], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qTerms: Seq[(Int, String)] = keywords.zipWithIndex.flatMap {
-      case (kw, qi) => analyzer.terms(kw).distinct.map(t => (qi, t))
-    }
-    val rts = resolve(qTerms.map(_._2).distinct) // ONE dictionary lookup
-    val byTerm = rts.map(rt => rt.term -> rt).toMap
-    val slots = qTerms.flatMap { case (qi, t) =>
-      byTerm.get(t).map(rt => (qi, rt.termId, bm25Idf(rt.df)))
-    }
-    if (slots.isEmpty)
-      return Seq.empty[(Int, Long, Long, Double)].toDF("q_id", "rank", "doc_ord", "score")
-    // bounded per-partition top-k selection BEFORE the rank window: the
-    // window otherwise shuffles every (q_id, doc) scored row a second time
-    // and sorts each query's whole matched set on one reducer — the prune
-    // caps the window's input at partitions x queries x k rows with
-    // bit-identical survivors (graft.TopK scaladoc has the order proof)
-    val scored = graft.TopK.prunePerKey(
-      batchScores(slots, byTerm.values.toSeq), "q_id", "score", "doc_ord", k)
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("score"), asc("doc_ord"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"), col("doc_ord"), col("score"))
-  }
+  def bm25TopKBatch(keywords: Seq[String], k: Int): DataFrame =
+    batchTopK(keywords, k, prune = false, metrics = None)
 
-  /** BATCH BM25 top-k with block-max WAND pruning: the query-set-replay
-    * shape of [[bm25TopKBatch]] combined with [[bm25TopKWand]]'s lossless
-    * block skipping — ONE pruned blocks scan for the union of the set's
-    * terms, every query's WAND run per doc bucket, one per-query top-k
-    * window. Rank-identical to the exhaustive batch plan (same per-term
-    * quotient arithmetic; parity pinned in SearcherSpec/BlockMaxWandSpec).
-    * Returns (q_id, rank, doc_ord, score); unknown-term/empty queries yield
-    * no rows for their q_id (OR semantics per query, like the batch path).
+  /** BATCH BM25 top-k with block-max WAND pruning: [[bm25TopKBatch]] with
+    * [[bm25TopKWand]]'s lossless block skipping turned on in the same
+    * per-bucket kernel ([[BlockMaxWand.topKBatch]]), so its rows are
+    * bit-identical to [[bm25TopKBatch]]'s (pinned in BlockMaxWandSpec).
+    * Pass `metrics` to count decoded-vs-total blocks.
     */
   def bm25TopKBatchWand(keywords: Seq[String], k: Int,
-      metrics: Option[WandMetrics] = None): DataFrame = {
+      metrics: Option[WandMetrics] = None): DataFrame =
+    batchTopK(keywords, k, prune = true, metrics)
+
+  /** The one batch body behind [[bm25TopKBatch]], [[bm25TopKBatchWand]] and
+    * their federated twins (which call it on global-stats slice views). */
+  private[query] def batchTopK(keywords: Seq[String], k: Int, prune: Boolean,
+      metrics: Option[WandMetrics]): DataFrame = {
     val qTerms: Seq[(Int, String)] = keywords.zipWithIndex.flatMap {
       case (kw, qi) => analyzer.terms(kw).distinct.map(t => (qi, t))
     }
@@ -1820,21 +1805,7 @@ final class Searcher(
       .groupBy(_._1)
       .map { case (qi, rows) => qi -> rows.map(r => r._2 -> r._3).toMap }
     BlockMaxWand.topKBatch(blocksFor(rts), queries, k, blockParams,
-      index.avgDocLen, metrics)
-  }
-
-  /** The batch scoring aggregation shared by [[bm25TopKBatch]] and the
-    * federated batch path ([[Federation.bm25TopKBatch]], which injects
-    * GLOBAL idf weights into the slots): one pruned postings scan for the
-    * union of the slot terms, one (q_id, doc) aggregation. Returns
-    * `(q_id, doc_ord, score)`. */
-  private[query] def batchScores(slots: Seq[(Int, Long, Double)],
-      rts: Seq[ResolvedTerm]): DataFrame = {
-    val slotsDf = slots.toDF("q_id", "term_id", "w_bm25")
-    withTokenCount(postingsFor(rts))
-      .join(broadcast(slotsDf), "term_id")
-      .groupBy(col("q_id"), col("doc_ord"))
-      .agg(sum(bm25Expr).as("score"))
+      index.avgDocLen, prune, metrics)
   }
 
   /** `(doc_ord, score)` of every doc matching any query term — the BM25

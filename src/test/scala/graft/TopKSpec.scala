@@ -53,6 +53,23 @@ class TopKSpec extends SparkSpec {
     }
   }
 
+  test("Int and String tie columns: prune-then-window equals window alone") {
+    val idTypes = Seq(
+      "int" -> base.withColumn("id", col("id").cast("int")),
+      // reversed numeric order, so string and Long order disagree
+      "string" -> base.withColumn("id", concat(lit("x"), (lit(100) - col("id")).cast("string"))))
+    for ((name, df) <- idTypes; k <- Seq(1, 2, 3, 10)) {
+      assert(ranked(TopK.prunePerKey(df, "q", "score", "id", k), k) == ranked(df, k),
+        s"$name ids k=$k")
+    }
+  }
+
+  test("k = Int.MaxValue keeps every row and equals window alone") {
+    val k = Int.MaxValue
+    assert(TopK.prunePerKey(base, "q", "score", "id", k).count() == base.count())
+    assert(ranked(TopK.prunePerKey(base, "q", "score", "id", k), k) == ranked(base, k))
+  }
+
   test("prune keeps at most k rows per key per partition") {
     val kept = TopK.prunePerKey(base, "q", "score", "id", 2)
     val perKey = kept.groupBy("q").count().collect()

@@ -93,22 +93,39 @@ class BlockMaxWandSpec extends SparkSpec {
     }
   }
 
+  private def batchRows(df: org.apache.spark.sql.DataFrame): Seq[(Int, Long, Long, Double)] =
+    df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq.sortBy(t => (t._1, t._2))
+
+  private def ofQuery(rows: Seq[(Int, Long, Long, Double)], qi: Int): Seq[(Long, Double)] =
+    rows.filter(_._1 == qi).map(t => (t._3, t._4))
+
   test("BATCH WAND matches the exhaustive batch plan's ranks (tie-aware)") {
+    // exact row equality between the two batch modes (one kernel); both
+    // tie-aware rank-identical to the independent bm25All reference
     val kws = queries
     val k = 10
-    val exh = searcher.bm25TopKBatch(kws, k).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .groupBy(_._1).view
-      .mapValues(_.sortBy(_._2).map(t => (t._3, t._4)).toSeq).toMap
-    val wnd = searcher.bm25TopKBatchWand(kws, k).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .groupBy(_._1).view
-      .mapValues(_.sortBy(_._2).map(t => (t._3, t._4)).toSeq).toMap
+    val exh = batchRows(searcher.bm25TopKBatch(kws, k))
+    val wnd = batchRows(searcher.bm25TopKBatchWand(kws, k))
+    assert(wnd == exh)
     kws.indices.foreach { qi =>
-      val full = collectPairs(searcher.bm25All(kws(qi)))
-      assertRankIdentical(full, exh.getOrElse(qi, Seq.empty), k)
-      assertRankIdentical(full, wnd.getOrElse(qi, Seq.empty), k)
-      assert(wnd.getOrElse(qi, Seq.empty).size == exh.getOrElse(qi, Seq.empty).size)
+      assertRankIdentical(collectPairs(searcher.bm25All(kws(qi))), ofQuery(exh, qi), k)
+    }
+  }
+
+  test("batch k edges: k <= 0 yields the empty frame, k = 1 and Int.MaxValue rank-identical") {
+    val kws = queries :+ ""
+    val full = kws.map(kw => collectPairs(searcher.bm25All(kw)))
+    for (k <- Seq(0, -1)) {
+      for (df <- Seq(searcher.bm25TopKBatch(kws, k), searcher.bm25TopKBatchWand(kws, k))) {
+        assert(df.columns.toSeq == Seq("q_id", "rank", "doc_ord", "score"))
+        assert(df.collect().isEmpty, s"k=$k")
+      }
+    }
+    for (k <- Seq(1, Int.MaxValue)) {
+      val exh = batchRows(searcher.bm25TopKBatch(kws, k))
+      assert(batchRows(searcher.bm25TopKBatchWand(kws, k)) == exh, s"k=$k")
+      kws.indices.foreach(qi => assertRankIdentical(full(qi), ofQuery(exh, qi), k))
     }
   }
 

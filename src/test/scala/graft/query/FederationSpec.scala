@@ -123,36 +123,44 @@ class FederationSpec extends SparkSpec {
     assert(metrics.get.blocksTotal.value > 0) // WAND actually ran per slice
   }
 
+  private def batchRows(df: DataFrame): Seq[(Int, Long, Long, Double)] =
+    df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq.sortBy(t => (t._1, t._2))
+
   test("bm25TopKBatch: federated == monolithic (q_id, rank, doc, score)") {
     val queries = Seq("go ruby", "spark join", "zz", "", "nosuchterm", "qq scan")
-    val k = 4
-    val m = mono.bm25TopKBatch(queries, k).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2) + 1, r.getDouble(3))) // ord→id
-      .sortBy(t => (t._1, t._2))
-    val f = fed.bm25TopKBatch(queries, k).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2))
-    assert(f.length == m.length)
-    f.zip(m).foreach { case ((fq, fr, fid, fs), (mq, mr, mid, ms)) =>
-      assert(fq == mq && fr == mr && fid == mid, s"row ($fq,$fr)")
-      assert(math.abs(fs - ms) < 1e-12)
+    for (k <- Seq(1, 4, Int.MaxValue)) {
+      val m = batchRows(mono.bm25TopKBatch(queries, k))
+        .map { case (q, r, ord, s) => (q, r, ord + 1, s) } // ord→id
+      val f = batchRows(fed.bm25TopKBatch(queries, k))
+      assert(f.length == m.length, s"k=$k")
+      f.zip(m).foreach { case ((fq, fr, fid, fs), (mq, mr, mid, ms)) =>
+        assert(fq == mq && fr == mr && fid == mid, s"k=$k row ($fq,$fr)")
+        assert(math.abs(fs - ms) < 1e-12)
+      }
     }
   }
 
   test("bm25TopKBatchWand: federated batch pruning rank-identical to batch") {
+    // one kernel for both modes: rows are equal exactly, not within a tolerance
     val queries = Seq("go ruby", "spark join", "zz", "qq scan", "nosuch")
     val metrics = Some(WandMetrics(spark))
-    def rows(df: DataFrame): Seq[(Int, Long, Long, Double)] =
-      df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .sortBy(t => (t._1, t._2))
-    val exh = rows(fed.bm25TopKBatch(queries, 3))
-    val wand = rows(fed.bm25TopKBatchWand(queries, 3, metrics))
-    assert(wand.length == exh.length)
-    wand.zip(exh).foreach { case ((wq, wr, wid, ws), (eq, er, eid, es)) =>
-      assert(wq == eq && wr == er && wid == eid, s"row ($wq,$wr)")
-      assert(math.abs(ws - es) < 1e-9)
+    for (k <- Seq(1, 3, Int.MaxValue)) {
+      val exh = batchRows(fed.bm25TopKBatch(queries, k))
+      assert(exh.nonEmpty)
+      assert(batchRows(fed.bm25TopKBatchWand(queries, k, metrics)) == exh, s"k=$k")
     }
     assert(metrics.get.blocksTotal.value > 0)
+  }
+
+  test("federated batch k <= 0 yields the empty (q_id, rank, doc_id, score) frame") {
+    val queries = Seq("go ruby", "zz")
+    for (k <- Seq(0, -1)) {
+      for (df <- Seq(fed.bm25TopKBatch(queries, k), fed.bm25TopKBatchWand(queries, k))) {
+        assert(df.columns.toSeq == Seq("q_id", "rank", "doc_id", "score"))
+        assert(df.collect().isEmpty, s"k=$k")
+      }
+    }
   }
 
   test("matchQuery / countMatches: AND and OR sets == monolithic") {
